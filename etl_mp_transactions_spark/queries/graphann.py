@@ -1294,8 +1294,8 @@ def r25_stream_graph_insert(spark, sf_dir):
     FROZEN from the base slice ({_BASE_PRED}); the arriving slice
     streams in as four mtime-ordered files — one micro-batch each —
     plus a replay of the first file that must contribute zero (the
-    already-a-member anti-join + per-batch partition overwrite, the
-    r17/r19 no-ledger construction). The graph state is per-batch
+    already-a-member anti-join + per-batch partition overwrite,
+    filesource.BatchLedger's replay rule). The graph state is per-batch
     IMMUTABLE top-8 edge fragments; the final per-src re-rank over
     all fragments must equal the batch frozen-books rebuild bit for
     bit — the SAME oracle as graph_ann_incremental_insert."""
@@ -1525,7 +1525,7 @@ def r26_stream_graph_delete(spark, sf_dir):
     10 = 3) streams in as four mtime-ordered id files — one
     micro-batch each — plus a replay of the first file that must
     contribute zero (already-tombstoned anti-join + per-batch
-    partition overwrite, the r22 no-ledger construction). Each batch
+    partition overwrite, BatchLedger's replay rule). Each batch
     repairs ONLY the nodes whose current edges hit the batch's new
     tombstones; the final latest-fragment view must equal the batch
     ``graph_ann_delete_repair`` — the SAME oracle (frozen-books

@@ -23,9 +23,6 @@ from pyspark.sql import functions as F
 
 from etl_mp_transactions_spark.operators import multimodal
 from etl_mp_transactions_spark.streaming import filesource
-from etl_mp_transactions_spark.streaming.filesource import (
-    scaled_state_partitions as _scaled_parts,
-)
 from etl_mp_transactions_spark.registry import query
 from etl_mp_transactions_spark.sources.tables import load_table
 from etl_mp_transactions_spark.workdirs import run_dir
@@ -575,10 +572,9 @@ def r12_stream_static_enrich(spark, sf_dir):
     (the reference's per-row BigQuery lookups, SURVEY.md §1.3,
     re-expressed as one declarative join). Complete-mode aggregation
     per segment == the batch join+agg exactly."""
-    import uuid
-
     from etl_mp_transactions_spark.sources.tables import load_table as _lt
     from etl_mp_transactions_spark.streaming.filesource import (
+        run_available_now_to_memory,
         staged_events_cached,
         stream_files_available_now,
         _events_schema,
@@ -600,18 +596,9 @@ def r12_stream_static_enrich(spark, sf_dir):
             .alias("total_value"),
         )
     )
-    table = f"r12_enrich_{uuid.uuid4().hex[:8]}"
-    with _scaled_parts(spark, stage):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("complete")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(table)
+    return run_available_now_to_memory(
+        agg, os.path.join(work, "ckpt"), "complete", stage
+    )
 
 
 @query(
@@ -634,11 +621,10 @@ def r13_stream_custom_state(spark, sf_dir):
     the final accumulated row per user (max n_events) must equal the
     batch groupBy exactly — integer cents make the cross-batch
     accumulation order-free."""
-    import uuid
-
     from pyspark.sql import Window as W
 
     from etl_mp_transactions_spark.streaming.filesource import (
+        run_available_now_to_memory,
         staged_events_cached,
         stream_files_available_now,
         _events_schema,
@@ -647,26 +633,13 @@ def r13_stream_custom_state(spark, sf_dir):
         running_user_totals_cents,
     )
 
-    from etl_mp_transactions_spark.streaming.filesource import (
-        scaled_state_partitions,
-    )
-
     work = run_dir("stream_custom_state")
     stage = staged_events_cached(spark, sf_dir, n_files=4)
     stream = stream_files_available_now(spark, stage, schema=_events_schema())
     out = running_user_totals_cents(stream)
-    table = f"r13_state_{uuid.uuid4().hex[:8]}"
-    with scaled_state_partitions(spark, stage):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    emissions = spark.table(table)
+    emissions = run_available_now_to_memory(
+        out, os.path.join(work, "ckpt"), "update", stage
+    )
     rn = F.row_number().over(
         W.partitionBy("user_id").orderBy(F.desc("n_events"))
     )
@@ -728,12 +701,11 @@ def r14_stream_late_drop(spark, sf_dir):
     with the naive <= b-1 rule under-keeps by ~2.5k rows at sf0.01).
     Counts per key are monotone across updates, so the final
     accumulated row per (day, type) is the max-n emission."""
-    import uuid
-
     from pyspark.sql import Window as W
 
     from etl_mp_transactions_spark.streaming.filesource import (
         _events_schema,
+        run_available_now_to_memory,
         staged_event_batches_cached,
         stream_files_available_now,
     )
@@ -762,18 +734,9 @@ def r14_stream_late_drop(spark, sf_dir):
             "cents",
         )
     )
-    table = f"r14_late_{uuid.uuid4().hex[:8]}"
-    with _scaled_parts(spark, stage):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(table)
-            .outputMode("update")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    emissions = spark.table(table)
+    emissions = run_available_now_to_memory(
+        agg, os.path.join(work, "ckpt"), "update", stage
+    )
     rn = F.row_number().over(
         W.partitionBy("day", "event_type").orderBy(F.desc("n"))
     )
@@ -806,10 +769,9 @@ def r15_kappa_backfill_union(spark, sf_dir):
     SAME declarative plan in both execution modes and its state is
     mergeable (count/sum over integer cents), so where the
     batch/stream boundary falls cannot change the answer."""
-    import uuid
-
     from etl_mp_transactions_spark.streaming.filesource import (
         _events_schema,
+        run_available_now_to_memory,
         staged_event_batches_cached,
         stream_files_available_now,
     )
@@ -847,19 +809,9 @@ def r15_kappa_backfill_union(spark, sf_dir):
         spark, tail_dir, schema=_events_schema()
     )
     work = run_dir("kappa_backfill")
-    table = f"r15_tail_{uuid.uuid4().hex[:8]}"
-    with _scaled_parts(spark, tail_dir):
-        q = (
-            agg(tail_stream)
-            .writeStream.format("memory")
-            .queryName(table)
-            .outputMode("complete")
-            .option("checkpointLocation", os.path.join(work, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    tail = spark.table(table)
+    tail = run_available_now_to_memory(
+        agg(tail_stream), os.path.join(work, "ckpt"), "complete", tail_dir
+    )
     return (
         history.unionAll(tail)
         .groupBy("event_type")
@@ -1017,15 +969,11 @@ def r17_stream_incremental_dedup(spark, sf_dir):
     micro-batch anti-joins content hashes against the persisted
     corpus index, bootstrapped from the OLD 80%. A fifth file
     replays batch 0 after the fact and must contribute ZERO rows.
-    Both sinks (survivor output, key commit) overwrite their own
-    batch= partition and the anti-join excludes the current batch's
-    partition, so any foreachBatch replay recomputes byte-identical
-    partitions — exactly-once without a transaction log (operator
-    docstring). The full-value oracle derives the same winners
-    relationally: first batch containing the hash, min doc_id within
-    it. The batch twin is dedup_incremental_new_vs_old; the bounded-
-    state story is SeenKeysStore.compact over the same partition
-    layout."""
+    Both sinks (survivor output, key commit) are ledger partitions of
+    the batch (filesource.BatchLedger's replay rule). The full-value
+    oracle derives the same winners relationally: first batch
+    containing the hash, min doc_id within it. The batch twin is
+    dedup_incremental_new_vs_old."""
     import shutil
     import uuid
 
@@ -1132,8 +1080,8 @@ def r18_stream_neardup_index(spark, sf_dir):
     join against the DISTINCT persisted signatures (bootstrapped from
     the old 80%), verified at est >= 0.9, smallest prior doc id for
     attribution; then the batch's own signatures join the index.
-    Replay safety is the r17 no-ledger construction (per-batch
-    partition overwrite + self-exclusion + already-indexed-doc skip).
+    Replay safety is BatchLedger's replay rule plus the
+    already-indexed-doc skip.
     The oracle re-derives every stage relationally with the portable
     md5 minhash family, including the arrival-order condition (a doc
     in batch g only matches docs from batches < g or the bootstrap
@@ -1209,7 +1157,7 @@ def r19_stream_ivfpq_ingest(spark, sf_dir):
     arriving slice streams in as four mtime-ordered files — one
     micro-batch each — plus a replay of the first file that must
     contribute ZERO rows (already-indexed skip + per-batch partition
-    overwrite, the r17 no-ledger construction, made trivial here by
+    overwrite, BatchLedger's replay rule, made trivial here by
     frozen-book per-vector independence). The final index must equal
     the batch ivfpq_incremental_encode bit for bit — same oracle."""
     import shutil
@@ -1490,7 +1438,7 @@ def r21_stream_rerank_serving(spark, sf_dir):
     deterministic 64-query serving batch arrives as four
     mtime-ordered files — one micro-batch each — plus a replay of the
     first file that must contribute ZERO rows (already-served skip +
-    per-batch partition overwrite, the r19 no-ledger construction,
+    per-batch partition overwrite, BatchLedger's replay rule,
     trivial again because frozen state makes every query's re-ranked
     top-5 batch-independent). Each micro-batch ADC-retrieves
     REFINE_R candidates and exact-re-ranks them against the original
@@ -1557,8 +1505,8 @@ def r23_stream_hybrid_serving(spark, sf_dir):
     (documents + embeddings) is FROZEN; the deterministic 8-query
     batch arrives as four mtime-ordered files — one micro-batch each —
     plus a replay of the first file that must contribute ZERO rows
-    (already-served skip + per-batch partition overwrite, the r19
-    no-ledger construction — trivial here because per-query hybrid
+    (already-served skip + per-batch partition overwrite,
+    BatchLedger's replay rule — trivial here because per-query hybrid
     results are batch-independent: BM25 df is per-term, corpus stats
     are global, RRF sees only that query's two arm lists). Each
     micro-batch runs the full request path online: lexical BM25 arm

@@ -65,6 +65,121 @@ def run_available_now_to_parquet(
     return df.sparkSession.read.parquet(out_dir)
 
 
+def run_available_now_to_memory(
+    df: DataFrame,
+    checkpoint_dir: str,
+    output_mode: str,
+    src_dir: str,
+    query_name: str | None = None,
+) -> DataFrame:
+    """Shared memory-sink pattern: one AvailableNow pass of a stateful
+    query under the scale-adaptive state-partition count for
+    ``src_dir``, returning the sink's table. The table is named
+    ``query_name``, or a fresh unique name so runs in one session
+    never collide. Used by the windowed, sliding and session streams
+    and the stream-static, custom-state, late-drop and kappa entries."""
+    import uuid
+
+    spark = df.sparkSession
+    name = query_name or f"stream_mem_{uuid.uuid4().hex[:8]}"
+    with scaled_state_partitions(spark, src_dir):
+        (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    return spark.table(name)
+
+
+def drain_files(
+    spark: SparkSession, src_dir: str, schema, fn, checkpoint_dir: str
+) -> None:
+    """One AvailableNow pass over ``src_dir``: one parquet file per
+    micro-batch, ``fn(batch_df, batch_id)`` as the foreachBatch body —
+    the reference's one-notification-one-run loop (main.py:92-131).
+    The checkpoint skips files already committed; a batch that ran
+    but did not commit re-runs with the same id and the same file."""
+    (
+        stream_files_available_now(
+            spark, src_dir, schema=schema, max_files_per_trigger=1
+        )
+        .writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+class BatchLedger:
+    """The store of earlier micro-batches' results that a batch reads
+    back: a directory of ``batch=<id>`` parquet partitions, each owned
+    by one micro-batch (``-1`` holds a generation loaded before the
+    stream starts) — the file-store form of the reference's Redis set
+    of processed checksums (src/redis_tools.py:42-54).
+
+    Replay rule: foreachBatch may re-run a batch id after a failure
+    (a restart re-executes the last batch whose offsets were logged
+    but whose commit was not), and the re-run must not see its own
+    earlier attempt. So a batch reads with :meth:`except_` — every
+    partition but its own, which is exactly the earlier batches — and
+    writes with :meth:`write`, which overwrites its own partition.
+    Each partition is then a deterministic function of (batch
+    content, batch id, earlier partitions), and a re-run rewrites it
+    byte-identically: an exactly-once effect with no transaction log
+    and no sink transaction. A re-delivered file arrives as a new
+    batch id; it contributes nothing where the runner anti-joins its
+    rows against :meth:`except_`.
+
+    Reads list the partition directories explicitly under the
+    explicit ``schema`` and return an empty frame of that schema when
+    there is nothing to read."""
+
+    def __init__(self, spark: SparkSession, root: str, schema: str):
+        self.spark = spark
+        self.root = root
+        self.schema = schema
+
+    def _path(self, batch_id: int) -> str:
+        return os.path.join(self.root, f"batch={batch_id}")
+
+    def _read(self, dirs: list[str]) -> DataFrame:
+        if not dirs:
+            return self.spark.createDataFrame([], self.schema)
+        return self.spark.read.schema(self.schema).parquet(*dirs)
+
+    def _dirs(self, skip: str | None = None) -> list[str]:
+        if not os.path.isdir(self.root):
+            return []
+        return [
+            os.path.join(self.root, d)
+            for d in sorted(os.listdir(self.root))
+            if d.startswith("batch=") and d != skip
+        ]
+
+    def write(self, batch_id: int, df: DataFrame) -> None:
+        """Overwrite ``batch_id``'s partition with ``df``."""
+        df.write.mode("overwrite").parquet(self._path(batch_id))
+
+    def read(self, batch_id: int) -> DataFrame:
+        """``batch_id``'s own partition as :meth:`write` stored it.
+        Separate from write because building the read-back frame
+        costs CPU that most writers would waste."""
+        return self._read([self._path(batch_id)])
+
+    def except_(self, batch_id: int) -> DataFrame:
+        """Every partition but ``batch_id``'s own."""
+        return self._read(self._dirs(skip=f"batch={batch_id}"))
+
+    def all(self) -> DataFrame:
+        """Every partition."""
+        return self._read(self._dirs())
+
+
 def stream_state_partitions(
     src_dir: str, target_bytes: int | None = None
 ) -> int:
@@ -196,17 +311,9 @@ def stream_windowed_counts_run(
             "total_value",
         )
     )
-    with scaled_state_partitions(spark, src_dir):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(out_table)
-            .outputMode(output_mode)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(out_table)
+    return run_available_now_to_memory(
+        agg, checkpoint_dir, output_mode, src_dir, out_table
+    )
 
 
 def stream_sliding_counts_run(
@@ -243,17 +350,9 @@ def stream_sliding_counts_run(
             "total_value",
         )
     )
-    with scaled_state_partitions(spark, src_dir):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(out_table)
-            .outputMode(output_mode)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(out_table)
+    return run_available_now_to_memory(
+        agg, checkpoint_dir, output_mode, src_dir, out_table
+    )
 
 
 def stream_session_counts_run(
@@ -288,17 +387,9 @@ def stream_session_counts_run(
             "n_events",
         )
     )
-    with scaled_state_partitions(spark, src_dir):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(out_table)
-            .outputMode(output_mode)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(out_table)
+    return run_available_now_to_memory(
+        agg, checkpoint_dir, output_mode, src_dir, out_table
+    )
 
 
 def stream_continuous_agg_run(
@@ -306,57 +397,44 @@ def stream_continuous_agg_run(
     src_dir: str,
     checkpoint_dir: str,
     state_dir: str,
-    max_files_per_trigger: int | None = 1,
 ) -> DataFrame:
     """Continuous aggregate (hypertable-rollup contract): each
     micro-batch writes its *partial* aggregate (count + exact-cents
-    sum per (hour, event_type)) to a path keyed by the batch id; the
+    sum per (hour, event_type)) to its own ledger partition; the
     readable view merges all batch partials with one group-by.
 
-    Exactly-once without sink transactions: aggregate merges are NOT
-    idempotent under foreachBatch replay (a re-run batch would
-    double-count if merged in place), but an overwrite keyed by
-    batch_id is — replaying batch b rewrites ``b=<id>`` with identical
-    content instead of adding to it. Merge cost at read ∝ number of
-    batch partials × group cardinality (kilobytes each); a periodic
-    compaction folds old partials into one (same algebra, same
-    guarantee).
+    Aggregate merges are NOT idempotent under foreachBatch replay (a
+    re-run batch merged in place would double-count), but a partial
+    that overwrites its own partition is (BatchLedger's replay rule).
+    Merge cost at read ∝ number of batch partials × group cardinality
+    (kilobytes each).
 
     The batch twin is a plain groupBy over all events — equality is
     the oracle statement (streaming partial-merge == batch)."""
-    stream = stream_files_available_now(
+    partials = BatchLedger(
         spark,
-        src_dir,
-        schema=_events_schema(),
-        max_files_per_trigger=max_files_per_trigger,
+        state_dir,
+        "window_start timestamp, event_type string, n bigint,"
+        " value_cents bigint",
     )
 
     def write_partial(batch_df: DataFrame, batch_id: int) -> None:
-        (
+        partials.write(
+            batch_id,
             batch_df.groupBy(
                 F.date_trunc("hour", "ts").alias("window_start"),
                 "event_type",
-            )
-            .agg(
+            ).agg(
                 F.count("*").alias("n"),
                 F.sum(F.round(F.col("value") * 100).cast("bigint")).alias(
                     "value_cents"
                 ),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(state_dir, f"b={batch_id}"))
+            ),
         )
 
-    q = (
-        stream.writeStream.foreachBatch(write_partial)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_files(spark, src_dir, _events_schema(), write_partial, checkpoint_dir)
     return (
-        spark.read.option("basePath", state_dir)
-        .parquet(os.path.join(state_dir, "b=*"))
+        partials.all()
         .groupBy("window_start", "event_type")
         .agg(
             F.sum("n").alias("n"),
@@ -370,13 +448,11 @@ def stream_upsert_latest_run(
     src_dir: str,
     checkpoint_dir: str,
     state_dir: str,
-    key: str = "user_id",
-    max_files_per_trigger: int | None = 1,
 ) -> DataFrame:
     """Keep-latest upsert sink via ``foreachBatch`` — the streaming
     MERGE INTO contract (R5 + K1): each micro-batch merges into a
-    keyed state table, newest row per key wins (ordered by ts, then
-    event_id as the deterministic tiebreak).
+    state table keyed by user_id, newest row per key wins (ordered by
+    ts, then event_id as the deterministic tiebreak).
 
     The merge is a max-by — associative, commutative, idempotent — so
     the final table equals the batch "latest per key" regardless of
@@ -394,17 +470,13 @@ def stream_upsert_latest_run(
 
     from pyspark.sql import Window
 
-    stream = stream_files_available_now(
-        spark,
-        src_dir,
-        schema=_events_schema(),
-        max_files_per_trigger=max_files_per_trigger,
-    )
     live = os.path.join(state_dir, "live")
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
-        w = Window.partitionBy(key).orderBy(F.desc("ts"), F.desc("event_id"))
+        w = Window.partitionBy("user_id").orderBy(
+            F.desc("ts"), F.desc("event_id")
+        )
         latest = (
             batch_df.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
@@ -427,13 +499,7 @@ def stream_upsert_latest_run(
         shutil.rmtree(live, ignore_errors=True)
         os.rename(staged, live)
 
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_files(spark, src_dir, _events_schema(), merge_batch, checkpoint_dir)
     return spark.read.parquet(live)
 
 
@@ -549,6 +615,9 @@ def staged_event_batches_cached(
     return target
 
 
+_SEEN_SCHEMA = "ch string"
+
+
 def stream_incremental_dedup_run(
     spark: SparkSession,
     src_dir: str,
@@ -558,44 +627,21 @@ def stream_incremental_dedup_run(
 ) -> DataFrame:
     """Streaming incremental corpus dedup (R17): new documents arrive
     as files; each micro-batch anti-joins its content hashes against
-    the persisted corpus index (a batch-partitioned parquet key
-    store), emits the survivors, and commits their keys — the
-    streaming twin of the batch ``dedup_incremental_new_vs_old``
-    (queries/dedup.py) and the scaled shape of the reference's
-    Redis-checked ingest loop (src/redis_tools.py:38-54 +
-    main.py:92-131, one notification = one micro-batch).
+    the corpus key ledger, emits the survivors, and commits their
+    keys — the streaming twin of the batch
+    ``dedup_incremental_new_vs_old`` (queries/dedup.py) and the scaled
+    shape of the reference's Redis-checked ingest loop
+    (src/redis_tools.py:38-54 + main.py:92-131, one notification =
+    one micro-batch).
 
-    REPLAY SAFETY WITHOUT A LEDGER: foreachBatch may re-run a batch
-    id after a failure, and the naive write-then-commit order breaks
-    either way it interleaves (commit-first makes the rerun's
-    anti-join empty and wipes the rewritten output; output-first
-    duplicates keys). Here BOTH sinks are deterministic functions of
-    (batch content, batch id, store-minus-this-batch): the anti-join
-    reads every store partition EXCEPT ``batch=<this id>``, and both
-    the output and the key commit overwrite their own
-    ``batch=<id>`` partition. Any rerun recomputes byte-identical
-    partitions — idempotent under arbitrary replay, no transaction
-    log needed. Bootstrap corpus keys load under ``batch=-1`` via
-    :func:`bootstrap_seen_store`.
-
-    State is BOUNDED the same way the batch store is: the partition
-    layout is exactly SeenKeysStore's append pattern, so
-    ``SeenKeysStore(spark, store_dir).compact(retention=, now=)``
-    applies between runs (drop expired keys, collapse partitions) —
-    run it while the stream is stopped, as with any file-store
-    maintenance.
+    Both the output and the key commit are ledger partitions of the
+    batch (BatchLedger's replay rule), so the naive write-then-commit
+    race cannot arise: commit-first would empty a re-run's anti-join
+    and wipe its output, output-first would duplicate keys. Bootstrap
+    corpus keys load under ``batch=-1`` via :func:`bootstrap_seen_store`.
     """
-    key_schema = "ch string"
-
-    def _seen_except(batch_id: int) -> DataFrame:
-        dirs = [
-            os.path.join(store_dir, d)
-            for d in sorted(os.listdir(store_dir))
-            if d.startswith("batch=") and d != f"batch={batch_id}"
-        ] if os.path.isdir(store_dir) else []
-        if not dirs:
-            return spark.createDataFrame([], key_schema)
-        return spark.read.schema(key_schema).parquet(*dirs)
+    seen = BatchLedger(spark, store_dir, _SEEN_SCHEMA)
+    out = BatchLedger(spark, out_dir, "ch string, canonical_doc_id long")
 
     def dedup_batch(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql.window import Window
@@ -608,30 +654,18 @@ def stream_incremental_dedup_run(
             .drop("_rn")
         )
         new_rows = first.join(
-            F.broadcast(_seen_except(batch_id)), "ch", "left_anti"
+            F.broadcast(seen.except_(batch_id)), "ch", "left_anti"
         ).localCheckpoint(eager=True)
-        new_rows.select(
-            "ch", F.col("doc_id").alias("canonical_doc_id")
-        ).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={batch_id}")
+        out.write(
+            batch_id,
+            new_rows.select("ch", F.col("doc_id").alias("canonical_doc_id")),
         )
-        new_rows.select("ch").write.mode("overwrite").parquet(
-            os.path.join(store_dir, f"batch={batch_id}")
-        )
+        seen.write(batch_id, new_rows.select("ch"))
 
-    stream = spark.readStream.format("parquet").schema(
-        SCHEMAS["documents"]
-    ).option("maxFilesPerTrigger", 1).load(src_dir)
-    q = (
-        stream.writeStream.foreachBatch(dedup_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_files(
+        spark, src_dir, SCHEMAS["documents"], dedup_batch, checkpoint_dir
     )
-    q.awaitTermination()
-    return spark.read.schema(
-        "ch string, canonical_doc_id long"
-    ).parquet(os.path.join(out_dir, "batch=*"))
+    return out.all()
 
 
 def bootstrap_seen_store(
@@ -640,8 +674,25 @@ def bootstrap_seen_store(
     """Load an existing corpus's content hashes into the incremental
     store as the ``batch=-1`` generation (``keys``: one string column
     named ch)."""
-    keys.select("ch").write.mode("overwrite").parquet(
-        os.path.join(store_dir, "batch=-1")
+    BatchLedger(spark, store_dir, _SEEN_SCHEMA).write(-1, keys.select("ch"))
+
+
+_NEARDUP_INDEX_SCHEMA = (
+    "doc_id long, sk string, sig array<bigint>, band_0 string, band_1 string"
+)
+
+
+def _neardup_index_rows(docs: DataFrame) -> DataFrame:
+    """Index rows for ``docs``: the MinHash signature as an array, its
+    md5 signature key ``sk`` and the two LSH band keys."""
+    from etl_mp_transactions_spark.operators import textdedup
+
+    nh = textdedup.NUM_HASHES
+    sig = textdedup.minhash_signatures(docs)
+    hcols = [F.col(f"h{i}").cast("string") for i in range(nh)]
+    sig_arr = F.array(*[F.col(f"h{i}") for i in range(nh)])
+    return sig.withColumn("sk", F.md5(F.concat_ws(",", *hcols))).select(
+        "doc_id", "sk", sig_arr.alias("sig"), "band_0", "band_1"
     )
 
 
@@ -662,54 +713,33 @@ def stream_neardup_index_run(
     (textdedup.minhash_signatures — 16 portable md5-derived hashes, 2
     LSH bands), identical-signature matches by signature-key join
     (est ≡ 1.0, no verification), cross-signature candidates by band
-    join against the DISTINCT persisted signatures (the
+    join against the DISTINCT indexed signatures (the
     dedup_minhash_lsh collapse lesson — buckets never hold doc
     copies), zip_with agreement verify at est ≥ threshold, smallest
     matching prior doc id for canonical attribution. Then ALL
-    arriving docs' signature rows commit to the index — they are
-    corpus now.
+    arriving docs' signature rows commit to the index ledger — they
+    are corpus now.
 
-    Replay safety is r17's no-ledger construction: both sinks
-    overwrite their own ``batch=<id>`` partition, matching reads
-    every index partition EXCEPT ``batch=<id>``, and docs whose ids
-    are already indexed are skipped entirely (an at-least-once
-    re-delivered FILE contributes zero; a re-run BATCH recomputes
-    byte-identical partitions). Bootstrap the existing corpus with
-    :func:`bootstrap_neardup_index` (``batch=-1``). State is the
-    parquet index — SeenKeysStore.compact's layout, same maintenance
-    story.
+    Docs whose ids are already indexed are skipped entirely, so a
+    re-delivered file contributes zero. Bootstrap the existing corpus
+    with :func:`bootstrap_neardup_index` (``batch=-1``).
     """
     from etl_mp_transactions_spark.operators import textdedup
 
     nh = textdedup.NUM_HASHES
-    idx_schema = (
-        "doc_id long, sk string, sig array<bigint>,"
-        " band_0 string, band_1 string"
+    index = BatchLedger(spark, index_dir, _NEARDUP_INDEX_SCHEMA)
+    matches = BatchLedger(
+        spark, out_dir, "doc_id long, dup_kind string, matched_old_id long"
     )
 
-    def _index_except(batch_id: int) -> DataFrame:
-        dirs = [
-            os.path.join(index_dir, d)
-            for d in sorted(os.listdir(index_dir))
-            if d.startswith("batch=") and d != f"batch={batch_id}"
-        ] if os.path.isdir(index_dir) else []
-        if not dirs:
-            return spark.createDataFrame([], idx_schema)
-        return spark.read.schema(idx_schema).parquet(*dirs)
-
     def match_batch(batch_df: DataFrame, batch_id: int) -> None:
-        old = _index_except(batch_id)
+        old = index.except_(batch_id)
         fresh = batch_df.join(
             F.broadcast(old.select("doc_id").distinct()),
             "doc_id",
             "left_anti",
         )
-        sig = textdedup.minhash_signatures(fresh)
-        hcols = [F.col(f"h{i}").cast("string") for i in range(nh)]
-        sig_arr = F.array(*[F.col(f"h{i}") for i in range(nh)])
-        rows = sig.withColumn("sk", F.md5(F.concat_ws(",", *hcols))).select(
-            "doc_id", "sk", sig_arr.alias("sig"), "band_0", "band_1"
-        ).localCheckpoint(eager=True)
+        rows = _neardup_index_rows(fresh).localCheckpoint(eager=True)
         old_min = old.groupBy("sk").agg(F.min("doc_id").alias("old_id"))
         exact = (
             rows.join(old_min, "sk")
@@ -762,42 +792,21 @@ def stream_neardup_index_run(
                 "doc_id", F.lit("near").alias("dup_kind"), "matched_old_id"
             )
         ).localCheckpoint(eager=True)
-        out.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={batch_id}")
-        )
-        rows.write.mode("overwrite").parquet(
-            os.path.join(index_dir, f"batch={batch_id}")
-        )
+        matches.write(batch_id, out)
+        index.write(batch_id, rows)
 
-    stream = spark.readStream.format("parquet").schema(
-        SCHEMAS["documents"]
-    ).option("maxFilesPerTrigger", 1).load(src_dir)
-    q = (
-        stream.writeStream.foreachBatch(match_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_files(
+        spark, src_dir, SCHEMAS["documents"], match_batch, checkpoint_dir
     )
-    q.awaitTermination()
-    return spark.read.schema(
-        "doc_id long, dup_kind string, matched_old_id long"
-    ).parquet(os.path.join(out_dir, "batch=*"))
+    return matches.all()
 
 
 def bootstrap_neardup_index(
     spark: SparkSession, docs: DataFrame, index_dir: str
 ) -> None:
     """Index an existing corpus's signatures as ``batch=-1``."""
-    from etl_mp_transactions_spark.operators import textdedup
-
-    nh = textdedup.NUM_HASHES
-    sig = textdedup.minhash_signatures(docs)
-    hcols = [F.col(f"h{i}").cast("string") for i in range(nh)]
-    sig_arr = F.array(*[F.col(f"h{i}") for i in range(nh)])
-    sig.withColumn("sk", F.md5(F.concat_ws(",", *hcols))).select(
-        "doc_id", "sk", sig_arr.alias("sig"), "band_0", "band_1"
-    ).write.mode("overwrite").parquet(
-        os.path.join(index_dir, "batch=-1")
+    BatchLedger(spark, index_dir, _NEARDUP_INDEX_SCHEMA).write(
+        -1, _neardup_index_rows(docs)
     )
 
 
@@ -817,55 +826,35 @@ def stream_ivfpq_ingest_run(
     index actually runs (fit/refresh the quantizers offline, encode
     the firehose online; stored codes never change).
 
-    Replay safety is the r17/r18 no-ledger construction, SIMPLER here
-    because frozen books make every vector's code independent of its
-    batch (pinned by tests/test_ivfpq.py): the sink overwrites its
-    own ``batch=<id>`` partition (re-run batches recompute
-    byte-identical partitions), and an at-least-once re-delivered
-    FILE contributes zero via the already-indexed skip (anti-join
-    against every index partition except this batch's own).
+    Frozen books make every vector's code independent of its batch
+    (pinned by tests/test_ivfpq.py); a re-delivered file contributes
+    zero via the already-indexed skip on vec_id.
     """
     from etl_mp_transactions_spark.operators import ivfpq as ivfpq_ops
 
-    def _indexed_except(batch_id: int) -> DataFrame:
-        dirs = [
-            os.path.join(index_dir, d)
-            for d in sorted(os.listdir(index_dir))
-            if d.startswith("batch=") and d != f"batch={batch_id}"
-        ] if os.path.isdir(index_dir) else []
-        if not dirs:
-            return spark.createDataFrame([], "vec_id long")
-        return spark.read.schema(
-            "vec_id long, cid long, pq_code long, distortion long"
-        ).parquet(*dirs).select("vec_id")
+    index = BatchLedger(
+        spark, index_dir, "vec_id long, cid long, pq_code long, distortion long"
+    )
 
     def encode_batch(batch_df: DataFrame, batch_id: int) -> None:
         fresh = batch_df.join(
-            _indexed_except(batch_id), "vec_id", "left_anti"
+            index.except_(batch_id).select("vec_id"), "vec_id", "left_anti"
         )
         _, packed = ivfpq_ops.encode_against_books(fresh, cb, pb)
-        packed.select(
-            "vec_id",
-            F.col("cid").cast("long").alias("cid"),
-            "pq_code",
-            "distortion",
-        ).write.mode("overwrite").parquet(
-            os.path.join(index_dir, f"batch={batch_id}")
+        index.write(
+            batch_id,
+            packed.select(
+                "vec_id",
+                F.col("cid").cast("long").alias("cid"),
+                "pq_code",
+                "distortion",
+            ),
         )
 
-    stream = spark.readStream.format("parquet").schema(
-        SCHEMAS["embeddings"]
-    ).option("maxFilesPerTrigger", 1).load(src_dir)
-    q = (
-        stream.writeStream.foreachBatch(encode_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_files(
+        spark, src_dir, SCHEMAS["embeddings"], encode_batch, checkpoint_dir
     )
-    q.awaitTermination()
-    return spark.read.schema(
-        "vec_id long, cid long, pq_code long, distortion long"
-    ).parquet(os.path.join(index_dir, "batch=*"))
+    return index.all()
 
 
 def stream_quality_gate_run(
@@ -882,47 +871,27 @@ def stream_quality_gate_run(
     batch-partitioned verdict table — the deployed life of a trained
     corpus filter (fit offline, gate the crawl firehose online).
 
-    Replay safety is the r19 construction: frozen state makes every
-    document's verdict independent of its batch, so the sink
-    overwrites its own ``batch=<id>`` partition (re-runs recompute
-    byte-identical partitions) and an at-least-once re-delivered file
-    contributes zero via the already-scored skip (anti-join against
-    every verdict partition except this batch's own)."""
+    Frozen state makes every document's verdict independent of its
+    batch; a re-delivered file contributes zero via the
+    already-scored skip on doc_id."""
     from etl_mp_transactions_spark.queries.quality_clf import score_against
 
-    out_schema = "doc_id long, lang string, x long, p_nano long, keep boolean"
-
-    def _scored_except(batch_id: int) -> DataFrame:
-        dirs = [
-            os.path.join(verdict_dir, d)
-            for d in sorted(os.listdir(verdict_dir))
-            if d.startswith("batch=") and d != f"batch={batch_id}"
-        ] if os.path.isdir(verdict_dir) else []
-        if not dirs:
-            return spark.createDataFrame([], "doc_id long")
-        return spark.read.schema(out_schema).parquet(*dirs).select("doc_id")
+    verdicts = BatchLedger(
+        spark,
+        verdict_dir,
+        "doc_id long, lang string, x long, p_nano long, keep boolean",
+    )
 
     def score_batch(batch_df: DataFrame, batch_id: int) -> None:
         fresh = batch_df.join(
-            _scored_except(batch_id), "doc_id", "left_anti"
+            verdicts.except_(batch_id).select("doc_id"), "doc_id", "left_anti"
         )
-        score_against(fresh, lm, params).write.mode("overwrite").parquet(
-            os.path.join(verdict_dir, f"batch={batch_id}")
-        )
+        verdicts.write(batch_id, score_against(fresh, lm, params))
 
-    stream = spark.readStream.format("parquet").schema(
-        SCHEMAS["documents"]
-    ).option("maxFilesPerTrigger", 1).load(src_dir)
-    q = (
-        stream.writeStream.foreachBatch(score_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_files(
+        spark, src_dir, SCHEMAS["documents"], score_batch, checkpoint_dir
     )
-    q.awaitTermination()
-    return spark.read.schema(out_schema).parquet(
-        os.path.join(verdict_dir, "batch=*")
-    )
+    return verdicts.all()
 
 
 def stream_rerank_serving_run(
@@ -944,18 +913,17 @@ def stream_rerank_serving_run(
     production lifecycle: books trained and corpus encoded offline
     (both frozen here), the query firehose served online.
 
-    Replay safety is the r19 construction, trivial again by frozen
-    state: every query's top-k is independent of its batch, so the
-    sink overwrites its own ``batch=<id>`` partition and an
-    at-least-once re-delivered file contributes zero via the
-    already-served skip (anti-join on query_id against every result
-    partition except this batch's own)."""
+    Frozen state makes every query's top-k independent of its batch;
+    a re-delivered file contributes zero via the already-served skip
+    on query_id."""
     from etl_mp_transactions_spark.operators.ivfpq_train import (
         rerank_exact,
     )
     from etl_mp_transactions_spark.operators.pq import _quantized
 
-    out_schema = "query_id long, vec_id long, exact_d2 long, rank long"
+    results = BatchLedger(
+        spark, out_dir, "query_id long, vec_id long, exact_d2 long, rank long"
+    )
 
     # the exact-rerank side is FROZEN across the stream: materialize
     # the quantized corpus once per run (lazy localCheckpoint — first
@@ -963,45 +931,23 @@ def stream_rerank_serving_run(
     # parquet scan + quantize per batch (the r23 corpus-side pattern)
     vectors = vectors.localCheckpoint(eager=False)
 
-    def _served_except(batch_id: int) -> DataFrame:
-        dirs = [
-            os.path.join(out_dir, d)
-            for d in sorted(os.listdir(out_dir))
-            if d.startswith("batch=") and d != f"batch={batch_id}"
-        ] if os.path.isdir(out_dir) else []
-        if not dirs:
-            return spark.createDataFrame([], "query_id long")
-        return (
-            spark.read.schema(out_schema).parquet(*dirs)
-            .select("query_id").distinct()
-        )
-
     def serve_batch(batch_df: DataFrame, batch_id: int) -> None:
         qset = _quantized(batch_df, "vec_id").select(
             F.col("vec_id").alias("query_id"), F.col("qv").alias("qqv")
         )
         fresh = qset.join(
-            _served_except(batch_id), "query_id", "left_anti"
+            results.except_(batch_id).select("query_id").distinct(),
+            "query_id",
+            "left_anti",
         )
-        rerank_exact(
-            fresh, cb, pb, codes, vectors, k_neighbors
-        ).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={batch_id}")
+        results.write(
+            batch_id, rerank_exact(fresh, cb, pb, codes, vectors, k_neighbors)
         )
 
-    stream = spark.readStream.format("parquet").schema(
-        SCHEMAS["embeddings"]
-    ).option("maxFilesPerTrigger", 1).load(src_dir)
-    q = (
-        stream.writeStream.foreachBatch(serve_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_files(
+        spark, src_dir, SCHEMAS["embeddings"], serve_batch, checkpoint_dir
     )
-    q.awaitTermination()
-    return spark.read.schema(out_schema).parquet(
-        os.path.join(out_dir, "batch=*")
-    )
+    return results.all()
 
 
 def stream_delete_tombstones_run(
@@ -1014,50 +960,23 @@ def stream_delete_tombstones_run(
     batches append to a batch-partitioned parquet tombstone table —
     the delete half of the index-maintenance lifecycle
     (queries/ivfpq_train_q.ivfpq_delete_serve consumes the final
-    set). Replay safety is the r17/r19 no-ledger construction, and
-    deletes make it doubly safe: the sink overwrites its own
-    ``batch=<id>`` partition and an at-least-once re-delivered file
-    contributes zero rows via the already-tombstoned skip — and even
-    a duplicate that slipped through would be erased by the
+    set). Deletes are doubly replay-safe: a re-delivered file
+    contributes zero rows via the already-tombstoned skip, and even a
+    duplicate that slipped through would be erased by the
     ``distinct()`` read (tombstones are a set union; deletes are
     idempotent by nature)."""
-
-    def _tombed_except(batch_id: int) -> DataFrame:
-        dirs = [
-            os.path.join(tomb_dir, d)
-            for d in sorted(os.listdir(tomb_dir))
-            if d.startswith("batch=") and d != f"batch={batch_id}"
-        ] if os.path.isdir(tomb_dir) else []
-        if not dirs:
-            return spark.createDataFrame([], "vec_id long")
-        return spark.read.schema("vec_id long").parquet(*dirs)
+    tombs = BatchLedger(spark, tomb_dir, "vec_id long")
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        fresh = batch_df.select("vec_id").join(
-            _tombed_except(batch_id), "vec_id", "left_anti"
-        )
-        fresh.write.mode("overwrite").parquet(
-            os.path.join(tomb_dir, f"batch={batch_id}")
+        tombs.write(
+            batch_id,
+            batch_df.select("vec_id").join(
+                tombs.except_(batch_id), "vec_id", "left_anti"
+            ),
         )
 
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("vec_id long")
-        .option("maxFilesPerTrigger", 1)
-        .load(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return (
-        spark.read.schema("vec_id long")
-        .parquet(os.path.join(tomb_dir, "batch=*"))
-        .distinct()
-    )
+    drain_files(spark, src_dir, "vec_id long", apply_batch, checkpoint_dir)
+    return tombs.all().distinct()
 
 
 def stream_hybrid_serving_run(
@@ -1074,13 +993,10 @@ def stream_hybrid_serving_run(
     batch-partitioned result table (queries/hybrid.py is the batch
     twin; same oracle).
 
-    Replay safety is the r19/r21 no-ledger construction: per-query
-    results are batch-independent (BM25 df is per-term, corpus stats
-    are global, fusion sees only that query's two arm lists), so the
-    sink overwrites its own ``batch=<id>`` partition and an
-    at-least-once re-delivered file contributes zero via the
-    already-served skip (anti-join on query_id against every result
-    partition except this batch's own)."""
+    Per-query results are batch-independent (BM25 df is per-term,
+    corpus stats are global, fusion sees only that query's two arm
+    lists); a re-delivered file contributes zero via the
+    already-served skip on query_id."""
     from etl_mp_transactions_spark.operators.pq import _quantized
     from etl_mp_transactions_spark.queries.hybrid import (
         _fused,
@@ -1088,9 +1004,11 @@ def stream_hybrid_serving_run(
     )
     from etl_mp_transactions_spark.sources.tables import load_table
 
-    out_schema = (
+    results = BatchLedger(
+        spark,
+        out_dir,
         "query_id long, doc_id long, r_lex long, r_sem long,"
-        " rrf_nano long, fused_rank long"
+        " rrf_nano long, fused_rank long",
     )
 
     # Corpus-side state is FROZEN across the stream: tokenize the
@@ -1109,49 +1027,30 @@ def stream_hybrid_serving_run(
         load_table(spark, sf_dir, "embeddings"), "vec_id"
     ).localCheckpoint(eager=False)
 
-    def _served_except(batch_id: int) -> DataFrame:
-        dirs = [
-            os.path.join(out_dir, d)
-            for d in sorted(os.listdir(out_dir))
-            if d.startswith("batch=") and d != f"batch={batch_id}"
-        ] if os.path.isdir(out_dir) else []
-        if not dirs:
-            return spark.createDataFrame([], "query_id long")
-        return (
-            spark.read.schema(out_schema).parquet(*dirs)
-            .select("query_id").distinct()
-        )
-
     def serve_batch(batch_df: DataFrame, batch_id: int) -> None:
         qset = _quantized(batch_df, "vec_id").select(
             F.col("vec_id").alias("query_id"), F.col("qv").alias("qqv")
         )
         fresh = qset.join(
-            _served_except(batch_id), "query_id", "left_anti"
+            results.except_(batch_id).select("query_id").distinct(),
+            "query_id",
+            "left_anti",
         )
         qids = fresh.select(F.col("query_id").alias("doc_id"))
-        _fused(
-            spark, sf_dir, qids=qids, qset=fresh, toks=toks, qv=corpus_qv
-        ).select(
-            "query_id", "doc_id", "r_lex", "r_sem", "rrf_nano",
-            "fused_rank",
-        ).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={batch_id}")
+        results.write(
+            batch_id,
+            _fused(
+                spark, sf_dir, qids=qids, qset=fresh, toks=toks, qv=corpus_qv
+            ).select(
+                "query_id", "doc_id", "r_lex", "r_sem", "rrf_nano",
+                "fused_rank",
+            ),
         )
 
-    stream = spark.readStream.format("parquet").schema(
-        SCHEMAS["embeddings"]
-    ).option("maxFilesPerTrigger", 1).load(src_dir)
-    q = (
-        stream.writeStream.foreachBatch(serve_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_files(
+        spark, src_dir, SCHEMAS["embeddings"], serve_batch, checkpoint_dir
     )
-    q.awaitTermination()
-    return spark.read.schema(out_schema).parquet(
-        os.path.join(out_dir, "batch=*")
-    )
+    return results.all()
 
 
 def stream_scene_cuts_run(
@@ -1164,36 +1063,24 @@ def stream_scene_cuts_run(
     arrive, their video assets are segmented per micro-batch
     (queries/video.scenes_from_docs — scene detection reads only the
     asset's own bytes, so any row subset computes independently), and
-    scene rows land in a batch-partitioned table. Replay safety is
-    the r19/r21/r23 no-ledger construction: per-asset results are
-    batch-independent by definition, the sink overwrites its own
-    ``batch=<id>`` partition, and a re-delivered file contributes
-    zero via the already-served skip on asset_id."""
+    scene rows land in a batch-partitioned table. Per-asset results
+    are batch-independent by definition; a re-delivered file
+    contributes zero via the already-served skip on asset_id."""
     from etl_mp_transactions_spark.queries.video import scenes_from_docs
 
-    out_schema = (
+    scenes = BatchLedger(
+        spark,
+        out_dir,
         "asset_id long, scene_id long, start_frame long,"
-        " n_frames long, intra_max_diff long"
+        " n_frames long, intra_max_diff long",
     )
-
-    def _served_except(batch_id: int) -> DataFrame:
-        dirs = [
-            os.path.join(out_dir, d)
-            for d in sorted(os.listdir(out_dir))
-            if d.startswith("batch=") and d != f"batch={batch_id}"
-        ] if os.path.isdir(out_dir) else []
-        if not dirs:
-            return spark.createDataFrame([], "asset_id long")
-        return (
-            spark.read.schema(out_schema).parquet(*dirs)
-            .select("asset_id").distinct()
-        )
 
     def serve_batch(batch_df: DataFrame, batch_id: int) -> None:
         fresh = batch_df.join(
-            _served_except(batch_id).withColumnRenamed(
-                "asset_id", "doc_id"
-            ),
+            scenes.except_(batch_id)
+            .select("asset_id")
+            .distinct()
+            .withColumnRenamed("asset_id", "doc_id"),
             "doc_id",
             "left_anti",
         )
@@ -1212,23 +1099,12 @@ def stream_scene_cuts_run(
             .cast("long")
             .alias("intra_max_diff"),
         )
-        out.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch={batch_id}")
-        )
+        scenes.write(batch_id, out)
 
-    stream = spark.readStream.format("parquet").schema(
-        SCHEMAS["documents"]
-    ).option("maxFilesPerTrigger", 1).load(src_dir)
-    q = (
-        stream.writeStream.foreachBatch(serve_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_files(
+        spark, src_dir, SCHEMAS["documents"], serve_batch, checkpoint_dir
     )
-    q.awaitTermination()
-    return spark.read.schema(out_schema).parquet(
-        os.path.join(out_dir, "batch=*")
-    )
+    return scenes.all()
 
 
 def stream_graph_insert_run(
@@ -1245,20 +1121,23 @@ def stream_graph_insert_run(
     ``graph_ann_incremental_insert`` identity, and the maintenance
     loop a deployed graph index actually runs.
 
-    State layout makes the stream==batch identity EXACT and the
-    replay story ledger-free: the graph is stored as per-batch
-    IMMUTABLE top-8 edge FRAGMENTS, never mutated in place —
-    batch b writes (a) the new nodes' top-8 over everything seen so
-    far including the batch itself, and (b) every existing node's
-    top-8 AMONG THIS BATCH's members of its probed lists (≤ deg rows
-    per node per batch, bucket-bounded work). Since the global top-8
-    of a union equals the top-8 of the per-part top-8s, the final
-    per-src re-rank over base fragment ∪ all batch fragments is
+    State layout makes the stream==batch identity EXACT: the graph is
+    stored as per-batch IMMUTABLE top-8 edge FRAGMENTS, never mutated
+    in place — batch b writes (a) the new nodes' top-8 over everything
+    seen so far including the batch itself, and (b) every existing
+    node's top-8 AMONG THIS BATCH's members of its probed lists (≤ deg
+    rows per node per batch, bucket-bounded work). Since the global
+    top-8 of a union equals the top-8 of the per-part top-8s, the
+    final per-src re-rank over base fragment ∪ all batch fragments is
     EXACTLY the frozen-books rebuild over the full corpus — the same
-    DuckDB oracle as the batch query. Replay safety: per-batch
-    partition overwrite for both members and edges, and an
-    at-least-once re-delivered file contributes zero via the
-    already-a-member anti-join (the r17/r19 no-ledger construction).
+    DuckDB oracle as the batch query.
+
+    Three ledgers hold the state: members, their probe-list
+    assignments, and edge fragments (the base fragment under
+    ``batch=-1``). Prior members and prior probes both come from disk,
+    so a batch re-executed after a restart sees the same prior set as
+    its first attempt. A re-delivered file contributes zero via the
+    already-a-member anti-join.
     """
     from pyspark.sql import Window
 
@@ -1269,67 +1148,45 @@ def stream_graph_insert_run(
         ivf_knn_topk,
     )
 
-    edges_dir = os.path.join(state_dir, "edges")
-    members_dir = os.path.join(state_dir, "members")
-    os.makedirs(edges_dir, exist_ok=True)
-    os.makedirs(members_dir, exist_ok=True)
-    emb_schema = "vec_id long, embedding array<float>, label int"
-    edge_schema = "src long, dst long, d2 long"
+    members = BatchLedger(
+        spark,
+        os.path.join(state_dir, "members"),
+        "vec_id long, embedding array<float>, label int",
+    )
+    probes = BatchLedger(
+        spark,
+        os.path.join(state_dir, "probes"),
+        "vec_id long, c int, pr int, qv array<int>",
+    )
+    edges = BatchLedger(
+        spark, os.path.join(state_dir, "edges"), "src long, dst long, d2 long"
+    )
     # The coarse books are FROZEN for the run, so every slice's list
     # assignment is batch-invariant: assign the base slice ONCE per
-    # run and each arriving batch once on arrival (per-run state that
-    # dies with the run — not a cross-query store), instead of
-    # re-scanning and re-assigning the whole seen corpus on both
-    # sides of every micro-batch's two builds.
+    # run and each arriving batch once on arrival (kept in the probes
+    # ledger), instead of re-scanning and re-assigning the whole seen
+    # corpus on both sides of every micro-batch's two builds.
     base_probes = _probes_df(
         base_emb, books, _GANN_NPROBE
     ).localCheckpoint(eager=False)
-    batch_probes: dict[int, DataFrame] = {}
-
-    def _probes_union(batch_id: int) -> DataFrame:
-        out = base_probes
-        for b in sorted(batch_probes):
-            if b != batch_id:
-                out = out.unionByName(batch_probes[b])
-        return out
-
     # base fragment: the frozen-books self-build over the base slice
     # (fresh per call — no cross-query graph memo, VERDICT r15 #2)
-    ivf_knn_topk(
-        base_emb, base_emb, books, q_probes=base_probes
-    ).write.mode("overwrite").parquet(
-        os.path.join(edges_dir, "batch=base")
+    edges.write(
+        -1, ivf_knn_topk(base_emb, base_emb, books, q_probes=base_probes)
     )
 
-    def _members_except(batch_id: int) -> DataFrame:
-        dirs = [
-            os.path.join(members_dir, d)
-            for d in sorted(os.listdir(members_dir))
-            if d.startswith("batch=") and d != f"batch={batch_id}"
-        ]
-        if not dirs:
-            return spark.createDataFrame([], emb_schema)
-        return spark.read.schema(emb_schema).parquet(*dirs)
-
     def maintain(batch_df: DataFrame, batch_id: int) -> None:
-        prior = _members_except(batch_id)
-        fresh = batch_df.select(
-            "vec_id", "embedding", "label"
-        ).join(prior.select("vec_id"), "vec_id", "left_anti")
-        fresh.write.mode("overwrite").parquet(
-            os.path.join(members_dir, f"batch={batch_id}")
+        prior = members.except_(batch_id)
+        members.write(
+            batch_id,
+            batch_df.select("vec_id", "embedding", "label").join(
+                prior.select("vec_id"), "vec_id", "left_anti"
+            ),
         )
-        fresh = spark.read.schema(emb_schema).parquet(
-            os.path.join(members_dir, f"batch={batch_id}")
-        )
-        # assign this batch's survivors once; on foreachBatch
-        # re-execution the entry is recomputed from the rewritten
-        # state file, mirroring _members_except's idempotence
-        fresh_probes = _probes_df(
-            fresh, books, _GANN_NPROBE
-        ).localCheckpoint(eager=False)
-        batch_probes[batch_id] = fresh_probes
-        prior_probes = _probes_union(batch_id)
+        fresh = members.read(batch_id)
+        probes.write(batch_id, _probes_df(fresh, books, _GANN_NPROBE))
+        fresh_probes = probes.read(batch_id)
+        prior_probes = base_probes.unionByName(probes.except_(batch_id))
         existing = base_emb.select(
             "vec_id", "embedding", "label"
         ).unionByName(prior)
@@ -1349,29 +1206,15 @@ def stream_graph_insert_run(
                 m_probes=fresh_probes,
             )
         )
-        frag.write.mode("overwrite").parquet(
-            os.path.join(edges_dir, f"batch={batch_id}")
-        )
+        edges.write(batch_id, frag)
 
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(SCHEMAS["embeddings"])
-        .option("maxFilesPerTrigger", 1)
-        .load(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(maintain)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    frags = spark.read.schema(edge_schema).parquet(
-        os.path.join(edges_dir, "batch=*")
+    drain_files(
+        spark, src_dir, SCHEMAS["embeddings"], maintain, checkpoint_dir
     )
     w = Window.partitionBy("src").orderBy("d2", "dst")
     return (
-        frags.withColumn("rnk", F.row_number().over(w).cast("long"))
+        edges.all()
+        .withColumn("rnk", F.row_number().over(w).cast("long"))
         .filter(F.col("rnk") <= _DEG)
         .select("src", "dst", "rnk")
     )
@@ -1390,36 +1233,35 @@ def stream_graph_delete_run(
     graph against FROZEN coarse books — the online twin of the batch
     ``graph_ann_delete_repair`` identity (queries/graphann.py).
 
-    State = two per-batch partition-overwritten stores, no ledger:
-    (a) tombstones (set union — idempotent by nature, the r22
-    construction: a replayed file's ids anti-join to nothing), and
-    (b) repair FRAGMENTS: batch b writes the full post-repair top-8
-    rows for exactly the nodes whose CURRENT edges hit this batch's
-    NEW tombstones, computed against the survivors-so-far. The
-    current view is latest-fragment-per-src over base ∪ fragments
+    State = two ledgers: (a) tombstones (set union — idempotent by
+    nature, the r22 construction: a replayed file's ids anti-join to
+    nothing), and (b) repair FRAGMENTS: batch b writes the full
+    post-repair top-8 rows for exactly the nodes whose CURRENT edges
+    hit this batch's NEW tombstones, computed against the
+    survivors-so-far (the base build is the ``batch=-1`` fragment).
+    The current view is latest-fragment-per-src over all fragments
     minus tombstoned srcs; by the batch query's pass-through argument
     (an unaffected node's candidates only shrank and its whole top-8
     survived), the view after every batch equals the frozen-books
     rebuild over the survivors — inductively, so the FINAL view
     equals batch ``graph_ann_delete_repair`` bit for bit: the same
-    DuckDB oracle. Replay safety falls out: a re-delivered file's
-    tombstones are already recorded, so its new-tombstone set is
-    empty, no node is affected, and its fragment is empty."""
+    DuckDB oracle. A re-delivered file's tombstones are already
+    recorded, so its new-tombstone set is empty, no node is affected,
+    and its fragment is empty."""
     from pyspark.sql import Window
 
     from etl_mp_transactions_spark.queries.graphann import (
-        _DEG,
         _GANN_NPROBE,
         _probes_df,
         ivf_knn_topk,
     )
 
-    tombs_dir = os.path.join(state_dir, "tombs")
-    frags_dir = os.path.join(state_dir, "frags")
-    os.makedirs(tombs_dir, exist_ok=True)
-    os.makedirs(frags_dir, exist_ok=True)
-    id_schema = "vec_id long"
-    frag_schema = "src long, dst long, d2 long, bid long"
+    tombs = BatchLedger(spark, os.path.join(state_dir, "tombs"), "vec_id long")
+    frags = BatchLedger(
+        spark,
+        os.path.join(state_dir, "frags"),
+        "src long, dst long, d2 long, bid long",
+    )
     emb = emb.localCheckpoint(eager=True)
     # frozen books ⇒ the full-corpus list assignment is run-invariant
     # and tombstoning only SHRINKS it: assign once per run, and each
@@ -1428,52 +1270,12 @@ def stream_graph_delete_run(
     corpus_probes = _probes_df(
         emb, books, _GANN_NPROBE
     ).localCheckpoint(eager=False)
-    base = ivf_knn_topk(emb, emb, books, q_probes=corpus_probes).select(
-        "src", "dst", "d2", F.lit(-1).cast("long").alias("bid")
+    frags.write(
+        -1,
+        ivf_knn_topk(emb, emb, books, q_probes=corpus_probes).select(
+            "src", "dst", "d2", F.lit(-1).cast("long").alias("bid")
+        ),
     )
-    base.write.mode("overwrite").parquet(
-        os.path.join(frags_dir, "batch=base")
-    )
-
-    def _read_all(root: str, schema: str) -> DataFrame:
-        dirs = [
-            os.path.join(root, d)
-            for d in sorted(os.listdir(root))
-            if d.startswith("batch=")
-        ]
-        if not dirs:
-            return spark.createDataFrame([], schema)
-        return spark.read.schema(schema).parquet(*dirs)
-
-    def _tombs_except(batch_id: int) -> DataFrame:
-        dirs = [
-            os.path.join(tombs_dir, d)
-            for d in sorted(os.listdir(tombs_dir))
-            if d.startswith("batch=") and d != f"batch={batch_id}"
-        ]
-        if not dirs:
-            return spark.createDataFrame([], id_schema)
-        return spark.read.schema(id_schema).parquet(*dirs)
-
-    def _frags_except(batch_id: int) -> DataFrame:
-        # mirror of _tombs_except for the fragment store (ADVICE r14
-        # medium): on foreachBatch RE-EXECUTION after a crash between
-        # the fragment write and the checkpoint commit, a prior
-        # attempt's batch={batch_id} fragment already exists; if the
-        # affected-detection view read it, the already-repaired
-        # fragment would mask the pre-batch edges, detection would
-        # find nothing, and the repair would be overwritten EMPTY —
-        # silently losing edges. Excluding the current batch id makes
-        # maintain() idempotent: re-execution sees the true pre-batch
-        # state.
-        dirs = [
-            os.path.join(frags_dir, d)
-            for d in sorted(os.listdir(frags_dir))
-            if d.startswith("batch=") and d != f"batch={batch_id}"
-        ]
-        if not dirs:
-            return spark.createDataFrame([], frag_schema)
-        return spark.read.schema(frag_schema).parquet(*dirs)
 
     def _view(frags: DataFrame, tombs: DataFrame) -> DataFrame:
         # latest fragment per src, minus tombstoned srcs AND dsts.
@@ -1501,25 +1303,23 @@ def stream_graph_delete_run(
         )
 
     def maintain(batch_df: DataFrame, batch_id: int) -> None:
-        prior_tombs = _tombs_except(batch_id)
-        fresh = batch_df.select("vec_id").join(
-            prior_tombs, "vec_id", "left_anti"
+        prior_tombs = tombs.except_(batch_id)
+        tombs.write(
+            batch_id,
+            batch_df.select("vec_id").join(prior_tombs, "vec_id", "left_anti"),
         )
-        fresh.write.mode("overwrite").parquet(
-            os.path.join(tombs_dir, f"batch={batch_id}")
-        )
-        fresh = spark.read.schema(id_schema).parquet(
-            os.path.join(tombs_dir, f"batch={batch_id}")
-        )
+        fresh = tombs.read(batch_id)
         all_tombs = prior_tombs.unionByName(fresh)
         # affected detection reads the view BEFORE this batch's
         # tombstones take effect — the all-tombs view would have
         # already dst-filtered away exactly the edges that prove a
         # node needs repair. Srcs tombstoned in this batch are
-        # excluded (they leave the graph, no repair). Fragments from
-        # a prior FAILED attempt of this same batch id are excluded
-        # too (_frags_except — re-execution idempotence).
-        view = _view(_frags_except(batch_id), prior_tombs)
+        # excluded (they leave the graph, no repair). The view skips
+        # this batch's own fragment: on re-execution an already-
+        # repaired fragment would mask the pre-batch edges, detection
+        # would find nothing, and the repair would be overwritten
+        # EMPTY (ADVICE r14 medium).
+        view = _view(frags.except_(batch_id), prior_tombs)
         affected = (
             view.join(
                 fresh.withColumnRenamed("vec_id", "dst"), "dst"
@@ -1558,28 +1358,10 @@ def stream_graph_delete_run(
             "d2",
             F.lit(batch_id).cast("long").alias("bid"),
         )
-        frag.write.mode("overwrite").parquet(
-            os.path.join(frags_dir, f"batch={batch_id}")
-        )
+        frags.write(batch_id, frag)
 
-    stream = (
-        spark.readStream.format("parquet")
-        .schema(id_schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(src_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(maintain)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    final = _view(
-        _read_all(frags_dir, frag_schema),
-        _read_all(tombs_dir, id_schema),
-    )
+    drain_files(spark, src_dir, "vec_id long", maintain, checkpoint_dir)
     w = Window.partitionBy("src").orderBy("d2", "dst")
-    return final.withColumn(
+    return _view(frags.all(), tombs.all()).withColumn(
         "rnk", F.row_number().over(w).cast("long")
     ).select("src", "dst", "d2", "rnk")

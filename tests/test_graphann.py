@@ -302,6 +302,55 @@ def test_stream_graph_delete_equals_batch(spark, sf_dir):
     assert stream == batch and len(stream) > 0
 
 
+def _stage_four_files(df, work):
+    """Write ``df`` as four mtime-ordered parquet files, split by
+    ``(vec_id div 10) % 4`` — one micro-batch each under the
+    runners' one-file-per-trigger drain. Returns the stage dir."""
+    import os
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    stage = os.path.join(work, "in")
+    os.makedirs(stage, exist_ok=True)
+    grouped = df.withColumn("g", F.expr("(vec_id div 10) % 4"))
+    t0 = 1700000000
+    for g in range(4):
+        tmp = os.path.join(work, f"tmp{g}")
+        grouped.filter(F.col("g") == g).drop("g").coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(tmp)
+        part = next(
+            f
+            for f in os.listdir(tmp)
+            if f.endswith(".parquet") and not f.startswith("_")
+        )
+        dst = os.path.join(stage, f"f{g}.parquet")
+        shutil.move(os.path.join(tmp, part), dst)
+        os.utime(dst, (t0 + 10 * g, t0 + 10 * g))
+    return stage
+
+
+def _drop_last_two_commits(ckpt):
+    """Crash simulation on the sanctioned recovery path: remove the
+    last two commit markers so a restart with the same checkpoint
+    re-executes the uncommitted batch against the state its earlier
+    attempt already wrote."""
+    import os
+
+    commits = os.path.join(ckpt, "commits")
+    dropped = sorted(
+        (f for f in os.listdir(commits) if not f.startswith(".")),
+        key=int,
+    )[-2:]
+    assert dropped, "expected commit markers"
+    for f in dropped:
+        os.remove(os.path.join(commits, f))
+        crc = os.path.join(commits, f".{f}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+
+
 def test_stream_graph_delete_reexecution_idempotent(
     spark, sf_dir, tmp_path
 ):
@@ -313,14 +362,14 @@ def test_stream_graph_delete_reexecution_idempotent(
     Streaming re-executes those batches against their own existing
     fragments (exactly the crash window; a FULL re-run with a fresh
     checkpoint over old multi-batch state is NOT a scenario the
-    engine produces — commits are monotone). Without the
-    _frags_except fix, the already-repaired fragment masks the
-    pre-batch edges, detection finds nothing, and the repair is
-    overwritten empty — the final view silently loses edges. With
-    it, the re-executed batch rewrites an identical fragment and the
-    final view still equals the batch oracle."""
+    engine produces — commits are monotone). If the affected-node
+    detection read the batch's own fragment, the already-repaired
+    fragment would mask the pre-batch edges, detection would find
+    nothing, and the repair would be overwritten empty — the final
+    view silently loses edges. Reading every fragment but the
+    batch's own, the re-executed batch rewrites an identical
+    fragment and the final view still equals the batch oracle."""
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
@@ -333,25 +382,9 @@ def test_stream_graph_delete_reexecution_idempotent(
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     work = str(tmp_path)
-    stage = os.path.join(work, "in")
-    os.makedirs(stage, exist_ok=True)
-    tombs = emb.filter(~F.expr(_DEL_PRED)).select("vec_id").withColumn(
-        "g", F.expr("(vec_id div 10) % 4")
+    stage = _stage_four_files(
+        emb.filter(~F.expr(_DEL_PRED)).select("vec_id"), work
     )
-    t0 = 1700000000
-    for g in range(4):
-        tmp = os.path.join(work, f"tmp{g}")
-        tombs.filter(F.col("g") == g).drop("g").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = next(
-            f
-            for f in os.listdir(tmp)
-            if f.endswith(".parquet") and not f.startswith("_")
-        )
-        dst = os.path.join(stage, f"f{g}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        os.utime(dst, (t0 + 10 * g, t0 + 10 * g))
     books = gann_books(emb)
     state = os.path.join(work, "state")
     ckpt = os.path.join(work, "ckpt")
@@ -361,19 +394,7 @@ def test_stream_graph_delete_reexecution_idempotent(
     first_rows = {
         (r.src, r.dst, r.d2, r.rnk) for r in first.collect()
     }
-    # crash simulation: drop the last two commit markers → restart
-    # re-executes those batches with their fragments already on disk
-    commits = os.path.join(ckpt, "commits")
-    dropped = sorted(
-        (f for f in os.listdir(commits) if not f.startswith(".")),
-        key=int,
-    )[-2:]
-    assert dropped, "expected commit markers"
-    for f in dropped:
-        os.remove(os.path.join(commits, f))
-        crc = os.path.join(commits, f".{f}.crc")
-        if os.path.exists(crc):
-            os.remove(crc)
+    _drop_last_two_commits(ckpt)
     second = filesource.stream_graph_delete_run(
         spark, stage, ckpt, state, emb, books
     )
@@ -386,6 +407,53 @@ def test_stream_graph_delete_reexecution_idempotent(
     }
     assert first_rows == batch and len(batch) > 0
     assert second_rows == batch
+
+
+def test_stream_graph_insert_reexecution_equals_batch(
+    spark, sf_dir, tmp_path
+):
+    """ADVICE r16 medium: the insert runner's prior members AND their
+    probe assignments must both come from disk. A restart that
+    re-executes an uncommitted batch starts with no in-process
+    memory of the earlier batches; had the probe frames lived only in
+    the process, the re-executed batch would join prior members
+    against base-only probes and silently drop (and mis-rank) edges
+    to earlier batches. After the restart the final graph must still
+    equal the batch ``graph_ann_incremental_insert``."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from etl_mp_transactions_spark.queries.graphann import (
+        _BASE_PRED,
+        gann_books,
+        graph_ann_incremental_insert,
+    )
+    from etl_mp_transactions_spark.streaming import filesource
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    work = str(tmp_path)
+    stage = _stage_four_files(emb.filter(~F.expr(_BASE_PRED)), work)
+    base = emb.filter(F.expr(_BASE_PRED))
+    books = gann_books(base)
+    state = os.path.join(work, "state")
+    ckpt = os.path.join(work, "ckpt")
+
+    def run():
+        out = filesource.stream_graph_insert_run(
+            spark, stage, ckpt, state, base, books
+        )
+        return {(r.src, r.dst, r.rnk) for r in out.collect()}
+
+    first = run()
+    _drop_last_two_commits(ckpt)
+    second = run()
+    batch = {
+        (r.src, r.dst, r.rnk)
+        for r in graph_ann_incremental_insert(spark, sf_dir).collect()
+    }
+    assert first == batch and len(batch) > 0
+    assert second == batch
 
 
 def test_routed_walk_enters_near_and_converges_no_later(spark, sf_dir):

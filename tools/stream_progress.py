@@ -19,6 +19,23 @@ import sys
 import time
 
 
+def result_hash(df):
+    """Order-independent multiset hash of ``df``: (row count, sum of
+    the rows' xxhash64 values as decimal(38,0)). A row that appears
+    twice adds its hash twice, where a bit_xor of row hashes would
+    cancel it; the decimal sum cannot overflow under ANSI, where a
+    bigint sum would."""
+    from pyspark.sql import functions as F
+
+    row = df.select(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(
+            F.xxhash64(*[df[c] for c in df.columns]).cast("decimal(38,0)")
+        ).alias("h"),
+    ).collect()[0]
+    return row["n"], row["h"]
+
+
 def main() -> int:
     repo_root, sf_dir, qname, out_path = sys.argv[1:5]
     sys.path.insert(0, repo_root)
@@ -56,14 +73,7 @@ def main() -> int:
     df.write.format("noop").mode("overwrite").save()
     sec = round(time.time() - t0, 3)
 
-    from pyspark.sql import functions as F
-
-    row = df.select(
-        F.count(F.lit(1)).alias("n"),
-        F.expr(
-            "bit_xor(xxhash64(" + ", ".join(df.columns) + "))"
-        ).alias("h"),
-    ).collect()[0]
+    n_rows, h = result_hash(df)
     time.sleep(2)  # let the listener bus drain
 
     batches = [
@@ -92,8 +102,8 @@ def main() -> int:
         "repo_root": repo_root,
         "sf_dir": sf_dir,
         "wall_sec": sec,
-        "n_rows": row["n"],
-        "result_hash_sum": str(row["h"]),
+        "n_rows": n_rows,
+        "result_hash_sum": str(h),
         "shuffle_partitions_session": spark.conf.get(
             "spark.sql.shuffle.partitions"
         ),
